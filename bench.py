@@ -143,10 +143,6 @@ def main() -> None:
     try:
         with open(spread_path, "w") as fh:
             json.dump({"queries": timings, "spread": spread, "sf": payload["sf"]}, fh)
-        sys.path.insert(0, os.path.join(os.path.dirname(spread_path), "tools"))
-        from _evidence import stage
-
-        stage(spread_path)
     except OSError as exc:  # side file is best-effort
         print(f"# spread not written: {exc}", file=sys.stderr)
     print(json.dumps(spread, separators=(",", ":")), file=sys.stderr)

@@ -1,11 +1,13 @@
 """Replicates the driver's correctness gate: every ``queries()`` entry vs
 its ``oracle_sql()`` on the same parquet, order-insensitive compare."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as entry_mod  # noqa: E402
 
 from helpers import assert_frames_match  # noqa: E402
@@ -45,7 +47,7 @@ def test_prefix_event_time_queries_on_pristine_session():
     assert event_time  # the prefix must keep covering this family
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[8]").appName("pristine-sim")
          .config("spark.ui.enabled", "false").getOrCreate())

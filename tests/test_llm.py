@@ -317,9 +317,10 @@ def test_clean_corpus_pipeline(tables, ddb):
     """Composed C4-style cleaning: quality gates -> language filter ->
     exact dedup, hash-matched against a DuckDB mirror of the whole
     pipeline (oracle t52)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
 
     from tidierdb_jl_spark.llm.pipeline import clean_corpus

@@ -129,9 +129,10 @@ def test_semi_reduce_plan_is_broadcast(tables):
 
 
 def test_split_by_hash(tables, ddb):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
 
     from tidierdb_jl_spark.llm.pipeline import split_by_hash

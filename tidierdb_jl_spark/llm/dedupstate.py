@@ -68,6 +68,7 @@ __all__ = ["DedupState", "EmbeddingDedupState", "NearDupState"]
 
 _META = "_dedup_state.json"
 _DATA = "data"
+_DATA_SCHEMA = "fingerprint STRING, fp_bucket INT"
 
 
 class DedupState:
@@ -161,13 +162,17 @@ class DedupState:
     def _data_path(self) -> str:
         return join_path(self.path, _DATA)
 
+    def _read_data(self, path: str):
+        """The state table at ``path``, read with its known schema: no
+        schema inference, so no parquet footer is opened at read time."""
+        return self.spark.read.schema(_DATA_SCHEMA).parquet(path)
+
     def _state_df(self, buckets=None):
-        """The state's fingerprint frame, optionally pruned to ``buckets``
-        (a list of partition ids — static partition pruning: only those
-        directories' files are listed and read)."""
-        if not self._meta["n_appends"]:
-            return None
-        df = self.spark.read.parquet(self._data_path())
+        """The state's fingerprint frame (callers check ``n_appends``
+        first: an empty state has no data directory), optionally pruned to
+        ``buckets`` (a list of partition ids — static partition pruning:
+        only those directories' files are listed and read)."""
+        df = self._read_data(self._data_path())
         if buckets is not None:
             df = df.where(isin_chunked("fp_bucket", [int(b) for b in buckets]))
         return df.select("fingerprint")
@@ -246,7 +251,7 @@ class DedupState:
         state; the frame recomputes consistently until ``append`` runs.
         Output columns: the batch's columns plus ``fingerprint``."""
         batch = self._keep_first(tf, id_col, text_col)
-        if self._state_df() is None:
+        if not self._meta["n_appends"]:
             return batch
         marked = bloom_mark(batch, "fingerprint", self._meta["bloom"], "__hit")
         return TidyFrame(self._resolve(marked.df))
@@ -264,8 +269,7 @@ class DedupState:
                 "or with_fingerprint(...) it yourself)"
             )
         fps = df.select("fingerprint").where(F.col("fingerprint").isNotNull())
-        state = self._state_df()
-        if state is not None:
+        if self._meta["n_appends"]:
             # idempotence across batches: never store a fingerprint twice
             # (within-batch distinct is in _append_new's aggregate)
             marked = bloom_mark(
@@ -376,7 +380,7 @@ class DedupState:
             # a freshly created state has no data directory yet — merging
             # zero fingerprints is a no-op, not a read error
             return 0
-        df = self.spark.read.parquet(other._data_path()).select("fingerprint")
+        df = self._read_data(other._data_path()).select("fingerprint")
         return self.append(df)
 
     def ingest(self, tf, id_col: str, text_col: str = "text") -> TidyFrame:
@@ -400,7 +404,7 @@ class DedupState:
         4x — measured at sf1).  The append skips re-verification
         (``_append_new``): filter_new's output is already proven absent."""
         batch = self._keep_first(tf, id_col, text_col)
-        if self._state_df() is None:
+        if not self._meta["n_appends"]:
             pinned = batch.df.localCheckpoint(eager=True)
         else:
             marked = bloom_mark(
@@ -509,7 +513,7 @@ class DedupState:
 
         data = self._data_path()
         tmp = data + ".compact.tmp"
-        df = self.spark.read.parquet(data)
+        df = self._read_data(data)
         total = dataset_size_bytes(self.spark, data)
         per_bucket = max(
             1, int(total / max(1, self.n_buckets) / (target_mb * 1024 * 1024)) + 1

@@ -111,13 +111,22 @@ def bloom_size(expected_items: int, fpp: float = 0.01) -> tuple[int, int]:
     return m, k
 
 
-def _positions(col, num_bits: int, num_hashes: int):
-    """k bit positions for a key: ``pmod(xxhash64(col, i), m)``.
+def _positions(key_sql: str, num_bits: int, num_hashes: int) -> list[str]:
+    """k bit positions for a key, as SQL: ``pmod(xxhash64(key, i), m)``.
     ``xxhash64`` with the extra literal arg is a fresh independent hash
     per i (the literal participates in the hashed tuple)."""
-    return [
-        F.pmod(F.xxhash64(col, F.lit(i)), F.lit(num_bits)) for i in range(num_hashes)
-    ]
+    return [f"pmod(xxhash64({key_sql}, {i}), {num_bits})" for i in range(num_hashes)]
+
+
+def _key_sql(sdf, key):
+    """``(frame, SQL text of the key)``.  A SQL-string key is used as is;
+    a Column key is projected into a helper column ``__bloom_key`` (the
+    caller drops it), since a Column cannot be spliced into SQL text.
+    Probe and build expressions are then emitted as SQL strings: one py4j
+    round trip each instead of ~20 per hash through the Column API."""
+    if isinstance(key, str):
+        return sdf, f"({key})"
+    return sdf.withColumn("__bloom_key", key), "`__bloom_key`"
 
 
 def bloom_build(
@@ -152,22 +161,13 @@ def bloom_build(
         num_bits = num_bits or m
         num_hashes = num_hashes or k
     num_bits = (num_bits + 63) // 64 * 64
-    sdf = df.df if hasattr(df, "df") else df
-    kc = F.expr(key) if isinstance(key, str) else key
-    pos = F.explode(F.array(*_positions(kc, num_bits, num_hashes))).alias("p")
+    sdf, key_sql = _key_sql(df.df if hasattr(df, "df") else df, key)
+    positions = ", ".join(_positions(key_sql, num_bits, num_hashes))
     words = (
-        sdf.where(kc.isNotNull())
-        .select(pos)
-        .select(
-            (F.col("p") / 64).cast("long").alias("w"),
-            # call_function: the SQL shiftleft takes column shift amounts
-            # (the Python wrapper's numBits is int-only)
-            F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (F.col("p") % 64).cast("int")
-            ).alias("mask"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("mask").alias("bits"))
+        sdf.where(f"{key_sql} IS NOT NULL")
+        .selectExpr(f"explode(array({positions})) AS p")
+        .groupBy(F.expr("p DIV 64").alias("w"))
+        .agg(F.expr("bit_or(shiftleft(1L, CAST(p % 64 AS INT)))").alias("bits"))
         .toPandas()
     )
     # vectorized assembly: at 10^8+ keys most of the m/64 words are
@@ -211,35 +211,33 @@ def bloom_merge(*filters: dict) -> dict:
 _PROBE_CHUNK = 4096
 
 
-def _probe_expr(bits: str, key_col, num_bits: int, num_hashes: int):
+def _probe_literal(sdf, key_sql: str, bloom: dict, into: str):
     """Pure-JVM membership test: for each of the k positions, pick the
     hex nibble (O(1) ``element_at`` into a chunked array literal + a
     bounded ``substring`` within the chunk), decode it (``conv``), test
     the bit.  AND of k lookups, each O(_PROBE_CHUNK) worst-case inside
-    whole-stage codegen, independent of filter size."""
-    chunks = F.array(*[
-        F.lit(bits[i:i + _PROBE_CHUNK])
-        for i in range(0, len(bits), _PROBE_CHUNK)
-    ])
-    cond = key_col.isNotNull()
-    for p in _positions(key_col, num_bits, num_hashes):
-        hexpos = (p / 4).cast("long")
-        chunk = F.element_at(chunks, (hexpos / _PROBE_CHUNK).cast("int") + 1)
-        nib = F.conv(
-            F.call_function(
-                "substring", chunk,
-                (hexpos % _PROBE_CHUNK).cast("int") + 1, F.lit(1),
-            ),
-            16, 10,
-        )
-        bit = F.call_function(
-            "shiftright", nib.cast("int"), (p % 4).cast("int")
-        ).bitwiseAND(1)
-        cond = cond & (bit == 1)
-    return cond
+    whole-stage codegen, independent of filter size.
+
+    The chunk array rides a helper column so the SQL text carries the
+    bitmap once, not k times; the optimizer folds it back into a single
+    literal inside the probe's projection."""
+    bits = bloom["bits"]
+    chunks = ", ".join(
+        f"'{bits[i:i + _PROBE_CHUNK]}'" for i in range(0, len(bits), _PROBE_CHUNK)
+    )
+    tests = [f"{key_sql} IS NOT NULL"]
+    for p in _positions(key_sql, bloom["m"], bloom["k"]):
+        chunk = f"element_at(`__bloom_chunks`, CAST({p} DIV {4 * _PROBE_CHUNK} AS INT) + 1)"
+        nib = f"conv(substring({chunk}, CAST(({p} DIV 4) % {_PROBE_CHUNK} AS INT) + 1, 1), 16, 10)"
+        tests.append(f"shiftright(CAST({nib} AS INT), CAST({p} % 4 AS INT)) & 1 = 1")
+    return (
+        sdf.withColumn("__bloom_chunks", F.expr(f"array({chunks})"))
+        .withColumn(into, F.expr(" AND ".join(tests)))
+        .drop("__bloom_chunks")
+    )
 
 
-def _probe_broadcast(sdf, kc, bloom: dict, into: str):
+def _probe_broadcast(sdf, key_sql: str, bloom: dict, into: str):
     """Broadcast-bitmap probe for filters too big to ride the plan as a
     literal.  Hash positions stay JVM-side (same ``_positions`` — the
     artifact is mode-portable: literal and broadcast answers are
@@ -251,9 +249,8 @@ def _probe_broadcast(sdf, kc, bloom: dict, into: str):
 
     nib = _nib_values(bloom["bits"])
     bc = sdf.sparkSession.sparkContext.broadcast(nib)
-    pos_arr = F.when(
-        kc.isNotNull(), F.array(*_positions(kc, bloom["m"], bloom["k"]))
-    )
+    positions = ", ".join(_positions(key_sql, bloom["m"], bloom["k"]))
+    pos_arr = F.expr(f"CASE WHEN {key_sql} IS NOT NULL THEN array({positions}) END")
 
     @pandas_udf("boolean")
     def _probe(pos: pd.Series) -> pd.Series:
@@ -282,7 +279,7 @@ def _probe_broadcast(sdf, kc, bloom: dict, into: str):
 _WJ_BLOCK = 4096
 
 
-def _probe_wordjoin(sdf, kc, bloom: dict, into: str):
+def _probe_wordjoin(sdf, key_sql: str, bloom: dict, into: str):
     """JVM-only probe: the bitmap becomes a broadcast
     (block_index, array<long> of ``_WJ_BLOCK`` words) relation, and each
     of the k probes is one BroadcastHashJoin fetching its block followed
@@ -319,7 +316,8 @@ def _probe_wordjoin(sdf, kc, bloom: dict, into: str):
 
     out = sdf
     tests = []
-    for i, p in enumerate(_positions(kc, bloom["m"], bloom["k"])):
+    for i, p_sql in enumerate(_positions(key_sql, bloom["m"], bloom["k"])):
+        p = F.expr(p_sql)
         bcol = f"__bb{i}"
         rhs = wdf.alias(f"__bwrel{i}")
         widx = (p / 64).cast("long")
@@ -347,7 +345,7 @@ def _probe_wordjoin(sdf, kc, bloom: dict, into: str):
             "shiftright", F.col(f"__bword{i}"), (p % 64).cast("int")
         ).bitwiseAND(1)
         tests.append(bit == 1)
-    cond = kc.isNotNull()
+    cond = F.expr(f"{key_sql} IS NOT NULL")
     for t in tests:
         cond = cond & t
     helper = [c for i in range(bloom["k"]) for c in (f"__bb{i}", f"__bword{i}")]
@@ -374,18 +372,17 @@ def bloom_mark(tf, key, bloom: dict, into: str = "bloom_hit", mode: str = "auto"
     are bit-for-bit the same."""
     from ..core import TidyFrame
 
-    sdf = tf.df if hasattr(tf, "df") else tf
-    kc = F.expr(key) if isinstance(key, str) else key
     if mode not in ("auto", "literal", "broadcast", "wordjoin"):
         raise ValueError(
             f"mode must be auto|literal|broadcast|wordjoin, got {mode!r}"
         )
+    sdf, key_sql = _key_sql(tf.df if hasattr(tf, "df") else tf, key)
     if mode == "auto":
         mode = "literal" if bloom["m"] <= _MAX_BITS_DEFAULT else "broadcast"
     if mode == "wordjoin":
-        out = _probe_wordjoin(sdf, kc, bloom, into)
+        out = _probe_wordjoin(sdf, key_sql, bloom, into)
     elif mode == "broadcast":
-        out = _probe_broadcast(sdf, kc, bloom, into)
+        out = _probe_broadcast(sdf, key_sql, bloom, into)
     else:
         if bloom["m"] > _MAX_BITS_DEFAULT:
             warnings.warn(
@@ -394,9 +391,9 @@ def bloom_mark(tf, key, bloom: dict, into: str = "bloom_hit", mode: str = "auto"
                 "mode='broadcast' (or 'auto')",
                 stacklevel=2,
             )
-        out = sdf.withColumn(
-            into, _probe_expr(bloom["bits"], kc, bloom["m"], bloom["k"])
-        )
+        out = _probe_literal(sdf, key_sql, bloom, into)
+    if not isinstance(key, str):
+        out = out.drop("__bloom_key")
     groups = getattr(tf, "groups", None)
     return TidyFrame(out, groups=groups)
 
