@@ -2,7 +2,8 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}.  With $SPARK_GRAFT_CPUS unset,
+``get_spark`` takes every core the process may run on.
 
 Timing discipline (BASELINE.md, tightened in r4 per ADVICE): one global
 warm-up action to JIT/open files, then each query runs
@@ -56,12 +57,11 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from tidierdb_jl_spark import get_spark
 
-    spark = get_spark(app="tidierdb-bench", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app="tidierdb-bench")
 
     qs = entry_mod.queries()
     names = [n for n in HEADLINE if n in qs]

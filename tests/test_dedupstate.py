@@ -492,3 +492,177 @@ def test_dedupstate_over_literal_cap_uses_broadcast_gate(spark, tables, tmp_path
     # replayed batch fully deduped through the broadcast gate
     assert st.ingest(_docs_batch(tables, 0, 250), "doc_id").df.count() == len(ids2)
     assert st.filter_new(_docs_batch(tables, 0, 250), "doc_id").df.count() == 0
+
+
+# ---------------------------------------------------------------------------
+# NearDupState max_bucket skew cap
+# ---------------------------------------------------------------------------
+
+
+def _fake_minhash(monkeypatch):
+    """Make ``minhash_signature`` read the signature straight from the text
+    (comma-separated ints), so band keys and est-Jaccard are chosen by the
+    test instead of by the hash family."""
+    from pyspark.sql import functions as F
+
+    from tidierdb_jl_spark.llm import dedup
+
+    def fake(tf, id_col, text_col="text", num_perm=64, shingle=3):
+        return TidyFrame(tf.df.withColumn(
+            "minhash",
+            F.expr(f"transform(split({text_col}, ','), x -> CAST(x AS BIGINT))"),
+        ))
+
+    monkeypatch.setattr(dedup, "minhash_signature", fake)
+
+
+def _sig_docs(spark, rows):
+    return TidyFrame(spark.createDataFrame(
+        [(i, ",".join(str(v) for v in sig)) for i, sig in rows],
+        "doc_id BIGINT, text STRING",
+    ))
+
+
+def test_neardupstate_max_bucket_caps_state_partners(spark, tmp_path, monkeypatch):
+    """num_perm=4, bands=4 (one component per band).  The probe [1,1,2,2]
+    shares bands 0-1 with docs 1-3 and bands 2-3 with docs 4-6 (est 0.5,
+    below the threshold) and all four with doc 10 (est 1.0).  Every band
+    key of the probe therefore has four stored partners; with
+    max_bucket=3 only the three smallest ids per key (never doc 10) reach
+    the candidate join, so the probe is kept."""
+    from tidierdb_jl_spark.llm.dedupstate import NearDupState
+
+    _fake_minhash(monkeypatch)
+    st = NearDupState.create(
+        spark, str(tmp_path / "nd"), num_perm=4, bands=4, n_buckets=4,
+        expected_items=1_000,
+    )
+    stored = [(1, [1, 1, 31, 41]), (2, [1, 1, 32, 42]), (3, [1, 1, 33, 43]),
+              (4, [51, 61, 2, 2]), (5, [52, 62, 2, 2]), (6, [53, 63, 2, 2]),
+              (10, [1, 1, 2, 2])]
+    first = st.ingest(_sig_docs(spark, stored), "doc_id", threshold=0.7)
+    assert first.collect()["dup_of"].isna().all()
+    assert st.stats()["n_docs"] == 7
+
+    probe = _sig_docs(spark, [(100, [1, 1, 2, 2])])
+    for cap, want in [(3, None), (4, 10), (200, 10)]:
+        out, _ = st.check(probe, "doc_id", threshold=0.7, max_bucket=cap)
+        got = out.collect()["dup_of"].tolist()
+        assert (got == [want]) if want is not None else pd.isna(got[0]), cap
+    assert st.stats()["n_docs"] == 7  # check never records
+
+
+def test_neardupstate_max_bucket_drops_hot_batch_key(spark, tmp_path, monkeypatch):
+    """Within a batch, a band key held by more than ``max_bucket`` rows is
+    dropped from the self-join; pairs that share a cold key still match."""
+    from tidierdb_jl_spark.llm.dedupstate import NearDupState
+
+    _fake_minhash(monkeypatch)
+    batch = [(1, [7, 7, 7, 9]), (2, [7, 7, 7, 9]), (3, [7, 7, 7, 11]),
+             (4, [7, 7, 7, 12]), (5, [7, 7, 7, 13])]
+    for cap, want in [(3, {2: 1}), (200, {2: 1, 3: 1, 4: 1, 5: 1})]:
+        st = NearDupState.create(
+            spark, str(tmp_path / f"nd{cap}"), num_perm=4, bands=4,
+            n_buckets=4, expected_items=1_000,
+        )
+        out, _ = st.check(_sig_docs(spark, batch), "doc_id", threshold=0.7,
+                          max_bucket=cap)
+        pdf = out.collect()
+        got = {int(r.doc_id): int(r.dup_of)
+               for r in pdf.itertuples() if not pd.isna(r.dup_of)}
+        assert got == want, cap
+
+
+# ---------------------------------------------------------------------------
+# on-disk layout of the three dedup states
+# ---------------------------------------------------------------------------
+
+
+def _layout(root):
+    """{subdir: (partition column, parquet columns as (name, type))}."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for sub in sorted(os.listdir(root)):
+        d = os.path.join(root, sub)
+        if not os.path.isdir(d):
+            continue
+        parts = {p.split("=")[0] for p in os.listdir(d) if "=" in p}
+        files = glob.glob(os.path.join(d, "*=*", "*.parquet"))
+        assert files, sub
+        schemas = {
+            tuple((f.name, str(f.type)) for f in pq.read_schema(p))
+            for p in files
+        }
+        assert len(schemas) == 1, (sub, schemas)
+        out[sub] = (parts, schemas.pop())
+    return out
+
+
+def _meta(root, name):
+    import json
+
+    assert sorted(f for f in os.listdir(root) if f.endswith(".json")) == [name]
+    with open(os.path.join(root, name)) as fh:
+        return json.load(fh)
+
+
+def test_dedup_states_on_disk_layout(spark, tables, tmp_path):
+    """The byte layout a state directory is read back with: meta file name
+    and keys, subdirectories, partition columns and parquet columns, after
+    two ingests (so the second one appended to existing partitions)."""
+    from pyspark.sql import functions as F
+
+    from tidierdb_jl_spark.llm.dedupstate import (
+        EmbeddingDedupState,
+        NearDupState,
+    )
+
+    bloom_keys = ["bits", "k", "m"]
+
+    p = str(tmp_path / "exact")
+    st = DedupState.create(spark, p, n_buckets=4, expected_items=1_000)
+    st.ingest(_docs_batch(tables, 0, 60), "doc_id")
+    st.ingest(_docs_batch(tables, 40, 120), "doc_id")
+    meta = _meta(p, "_dedup_state.json")
+    assert sorted(meta) == ["bloom", "expected_items", "n_appends",
+                            "n_buckets", "n_fingerprints"]
+    assert sorted(meta["bloom"]) == bloom_keys and meta["n_appends"] == 2
+    assert _layout(p) == {
+        "data": ({"fp_bucket"}, (("fingerprint", "string"),)),
+    }
+    assert DedupState.open(spark, p).stats() == st.stats()
+
+    p = str(tmp_path / "near")
+    st = NearDupState.create(spark, p, num_perm=16, bands=4, n_buckets=4,
+                             expected_items=1_000)
+    st.ingest(_docs_batch(tables, 0, 60), "doc_id")
+    st.ingest(_docs_batch(tables, 60, 120), "doc_id")
+    meta = _meta(p, "_neardup_state.json")
+    assert sorted(meta) == ["bands", "bloom", "expected_items", "n_appends",
+                            "n_buckets", "n_docs", "num_perm", "shingle"]
+    assert sorted(meta["bloom"]) == bloom_keys and meta["n_appends"] == 2
+    assert _layout(p) == {
+        "bands": ({"bb"}, (("doc_id", "int64"), ("band", "int32"),
+                           ("bh", "int32"))),
+        "sigs": ({"sb"}, (("doc_id", "int64"), ("minhash", "list<element: int64>"))),
+    }
+    assert NearDupState.open(spark, p).stats() == st.stats()
+
+    p = str(tmp_path / "emb")
+    st = EmbeddingDedupState.create(spark, p, n_buckets=4, expected_items=1_000)
+    emb = tables["embeddings"].select("vec_id", "embedding")
+    st.ingest(emb.filter("vec_id < 60"), "vec_id", "embedding")
+    st.ingest(TidyFrame(emb.filter("vec_id >= 40 AND vec_id < 120").df
+                        .withColumn("vec_id", F.col("vec_id") + 1000)),
+              "vec_id", "embedding")
+    meta = _meta(p, "_embdedup_state.json")
+    assert sorted(meta) == ["bands", "bloom", "dim", "expected_items",
+                            "n_appends", "n_buckets", "n_vecs", "nbits"]
+    assert sorted(meta["bloom"]) == bloom_keys and meta["n_appends"] == 2
+    assert _layout(p) == {
+        "bands": ({"bb"}, (("vec_id", "int64"), ("band", "int32"),
+                           ("sig", "int64"))),
+        "vecs": ({"vb"}, (("vec_id", "int64"), ("unit", "list<element: double>"))),
+    }
+    assert EmbeddingDedupState.open(spark, p).stats() == st.stats()

@@ -50,28 +50,20 @@ state surface); the composition mirrors its verb chaining
 
 from __future__ import annotations
 
-import json
-
 from ..core import TidyFrame
-from ..sources.fsio import (
-    fs_exists,
-    fs_mkdirs,
-    join_path,
-    read_text,
-    write_text_atomic,
-)
-
-_META = "_corpus_prep_state.json"
+from ..sources.fsio import join_path
+from ..streaming.stream import foreach_batch
+from ._state import _PersistentState
 
 
-class CorpusPrepState:
+class CorpusPrepState(_PersistentState):
     """``create`` → per-shard ``ingest`` → an accreting, deduped,
     split-stable training corpus."""
 
+    _META = "_corpus_prep_state.json"
+
     def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
+        super().__init__(spark, path, meta)
         self._exact = None
         self._near = None
         self._emb = None
@@ -91,10 +83,7 @@ class CorpusPrepState:
         n_buckets: int = 64,
         **gates,
     ) -> "CorpusPrepState":
-        path = str(path)
-        if fs_exists(spark, join_path(path, _META)):
-            raise ValueError(f"CorpusPrepState already exists at {path}")
-        meta = {
+        st = cls._create(spark, path, {
             "lang": lang,
             "train_frac": float(train_frac),
             "neardup": bool(neardup),
@@ -105,43 +94,28 @@ class CorpusPrepState:
             "n_batches": 0,
             "n_ingested": 0,
             "n_kept": 0,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
+        })
         from .dedupstate import DedupState
 
         DedupState.create(
-            spark, join_path(path, "exact"),
+            spark, join_path(st.path, "exact"),
             n_buckets=n_buckets, expected_items=expected_items,
         )
         if neardup:
             from .dedupstate import NearDupState
 
             NearDupState.create(
-                spark, join_path(path, "near"),
+                spark, join_path(st.path, "near"),
                 n_buckets=n_buckets, expected_items=expected_items,
             )
         if embdedup:
             from .dedupstate import EmbeddingDedupState
 
             EmbeddingDedupState.create(
-                spark, join_path(path, "emb"),
+                spark, join_path(st.path, "emb"),
                 n_buckets=n_buckets, expected_items=expected_items,
             )
-        st._write_meta()
         return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "CorpusPrepState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), _META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, _META), json.dumps(self._meta)
-        )
 
     def _states(self):
         from .dedupstate import DedupState, EmbeddingDedupState, NearDupState
@@ -345,13 +319,6 @@ class CorpusPrepState:
             meta["n_kept"] += pinned.count()
             self._write_meta()
 
-        w = (
-            stream_tf.df.writeStream.outputMode("append")
-            .foreachBatch(_ingest_batch)
-            .option("checkpointLocation", checkpoint)
+        return foreach_batch(
+            stream_tf, _ingest_batch, checkpoint, mode="append", trigger=trigger
         )
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif trigger:
-            w = w.trigger(processingTime=trigger)
-        return w.start()

@@ -47,31 +47,126 @@ table).
 
 from __future__ import annotations
 
-import json
+from functools import partial
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from ..core import TidyFrame
 from ..operators.bloom import bloom_build, bloom_mark, bloom_merge, bloom_size
 from ..operators.inlist import isin_chunked
-from ..sources.fsio import (
-    fs_exists,
-    fs_mkdirs,
-    join_path,
-    read_text,
-    swap_dir,
-    write_text_atomic,
-)
+from ..sources.fsio import join_path, swap_dir
+from ..streaming.stream import foreach_batch
+from ._state import _PersistentState
+from .simsearch import _dot, _hyperplanes, _make_sig_udf, _to_double
 from .textstats import with_fingerprint
+from .vectorindex import _UNIT
 
 __all__ = ["DedupState", "EmbeddingDedupState", "NearDupState"]
 
-_META = "_dedup_state.json"
 _DATA = "data"
 _DATA_SCHEMA = "fingerprint STRING, fp_bucket INT"
 
+# above this many distinct probed keys, stop shipping them as a scan-side
+# IN filter (the plan literal would grow unbounded) and fall back to
+# bucket-level pruning alone.  Bounds the driver collect and the plan
+# literal; the scan filter itself ships as ``isin_chunked`` (OR of
+# <=500-value INs) so the full list reaches parquet-mr as shallow pushable
+# chains — see operators/inlist.py for the stack-overflow ceiling that
+# rules out one big IN.
+_IN_PUSHDOWN_CAP = 4096
 
-class DedupState:
+
+def _bloom_opts(col: str) -> dict:
+    """Writer options for a per-column PARQUET bloom filter on ``col``:
+    a keyed scan's IN probe then skips whole row groups whose bloom
+    rejects all probed keys (min/max stats are useless on uniform hashes
+    — measured 100k rows read -> 0 for absent probes).  Adaptive sizing
+    keeps the bloom proportional to the actual row-group NDV instead of
+    the 1 MB default."""
+    return {
+        f"parquet.bloom.filter.enabled#{col}": "true",
+        "parquet.bloom.filter.adaptive.enabled": "true",
+    }
+
+
+def _pruned_read(probe_df, bucket_expr: str, key_col: str, reader):
+    """The state rows a probe can match, read with two levels of pruning.
+
+    ``probe_df`` carries the probed keys in ``key_col`` (named as in the
+    state table) and whatever ``bucket_expr`` — the state's partition
+    expression — reads; ``reader(buckets)`` returns the state table pruned
+    to those partition ids.  The distinct (bucket, key) pairs — a driver
+    collect bounded by the CAP, never by data — prune partitions
+    (directory level) and, when the keys are few (the normal case: true
+    dups + ~FPR of the batch), are pushed as a parquet ``In`` filter, so
+    row-group stats and parquet blooms skip nearly every row of the
+    surviving partitions too (files are written sorted by key for exactly
+    this).  Past the CAP only the buckets prune.  Returns None when the
+    probe is empty."""
+    rows = (
+        probe_df.select(F.expr(bucket_expr).alias("b"), key_col)
+        .distinct()
+        .limit(_IN_PUSHDOWN_CAP + 1)
+        .collect()
+    )
+    if not rows:
+        return None
+    if len(rows) <= _IN_PUSHDOWN_CAP:
+        return reader(sorted({r[0] for r in rows})).where(
+            isin_chunked(key_col, [r[1] for r in rows])
+        )
+    buckets = [
+        r[0]
+        for r in probe_df.select(F.expr(bucket_expr).alias("b")).distinct().collect()
+    ]
+    return reader(buckets)
+
+
+class _BucketedStore(_PersistentState):
+    """A state of parquet tables directory-partitioned by a stable hash
+    bucket (``n_buckets`` in the meta) plus a mergeable bloom sidecar
+    (``bloom`` in the meta) over the keys a batch is gated on."""
+
+    def _append_partitioned(
+        self, df, sub, part_col, sort_cols, bloom_opts, key_expr=None, pin=False
+    ) -> int:
+        """Append ``df`` to table ``sub`` and return the rows written.
+        ``repartition(n_buckets, part_col)`` bounds the write at ONE file
+        per bucket per append — without it, every shuffle partition writes
+        into every bucket directory and the state degrades into thousands
+        of KB-files whose listing cost grows with the number of appends
+        (measured 6s -> 29s per batch over 10 appends at sf1).  Files are
+        sorted by ``sort_cols`` so row-group stats stay tight for the
+        pruned reads.  ``pin`` checkpoints the placed frame before the
+        write (its lineage may read the path being written).  With
+        ``key_expr`` the written rows' keys are OR-merged into the meta's
+        bloom sidecar; the row count rides the write job as an observe
+        accumulator.  Counters and the meta write are the caller's."""
+        placed = df.repartition(self._meta["n_buckets"], part_col).sortWithinPartitions(
+            *sort_cols
+        )
+        if pin:
+            placed = placed.localCheckpoint(eager=True)
+        obs = Observation()
+        (
+            placed.observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.partitionBy(part_col)
+            .options(**bloom_opts)
+            .mode("append")
+            .parquet(join_path(self.path, sub))
+        )
+        n = int(obs.get["n"])
+        if n and key_expr is not None:
+            bloom = self._meta["bloom"]
+            batch_bloom = bloom_build(
+                placed, key_expr, num_bits=bloom["m"], num_hashes=bloom["k"]
+            )
+            self._meta["bloom"] = bloom_merge(bloom, batch_bloom)
+        return n
+
+
+class DedupState(_BucketedStore):
     """A persistent, bloom-gated, partition-pruned fingerprint store.
 
     Typical batch loop::
@@ -82,10 +177,7 @@ class DedupState:
             fresh.df.write.parquet(out, mode="append")
     """
 
-    def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
+    _META = "_dedup_state.json"
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -101,35 +193,16 @@ class DedupState:
         """Initialize an empty state directory.  ``n_buckets`` fixes the
         directory-partition fan-out (pick ~state_size / 1 GB at scale);
         ``expected_items`` sizes the bloom for the LIFETIME of the state."""
-        path = str(path)
-        if fs_exists(spark, join_path(path, _META)):
-            raise ValueError(f"DedupState already exists at {path}")
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
         m, k = bloom_size(expected_items, fpp)
-        meta = {
+        return cls._create(spark, path, {
             "n_buckets": int(n_buckets),
             "bloom": {"bits": "0" * (m // 4), "m": m, "k": k},
             "expected_items": int(expected_items),
             "n_fingerprints": 0,
             "n_appends": 0,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
-        st._write_meta()
-        return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "DedupState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), _META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, _META), json.dumps(self._meta)
-        )
+        })
 
     # -- introspection -----------------------------------------------------
 
@@ -167,15 +240,16 @@ class DedupState:
         schema inference, so no parquet footer is opened at read time."""
         return self.spark.read.schema(_DATA_SCHEMA).parquet(path)
 
-    def _state_df(self, buckets=None):
+    def _state_df(self, buckets):
         """The state's fingerprint frame (callers check ``n_appends``
-        first: an empty state has no data directory), optionally pruned to
-        ``buckets`` (a list of partition ids — static partition pruning:
-        only those directories' files are listed and read)."""
-        df = self._read_data(self._data_path())
-        if buckets is not None:
-            df = df.where(isin_chunked("fp_bucket", [int(b) for b in buckets]))
-        return df.select("fingerprint")
+        first: an empty state has no data directory) pruned to ``buckets``
+        (a list of partition ids — static partition pruning: only those
+        directories' files are listed and read)."""
+        return (
+            self._read_data(self._data_path())
+            .where(isin_chunked("fp_bucket", [int(b) for b in buckets]))
+            .select("fingerprint")
+        )
 
     def _keep_first(self, tf, id_col: str, text_col: str):
         """Fingerprint + within-batch keep-first (one shuffle over the
@@ -188,60 +262,19 @@ class DedupState:
             .select(*cols, "fingerprint")
         )
 
-    # above this many distinct bloom-positive fingerprints, stop shipping
-    # them as a scan-side IN filter (the plan literal would grow unbounded)
-    # and fall back to bucket-level pruning alone.  Bounds the driver
-    # collect and the plan literal; the scan filter itself ships as
-    # ``isin_chunked`` (OR of <=500-value INs) so the full list reaches
-    # parquet-mr as shallow pushable chains — see operators/inlist.py for
-    # the stack-overflow ceiling that rules out one big IN.
-    _IN_PUSHDOWN_CAP = 4096
-
-    # per-column PARQUET bloom filters on the state files: the verify
-    # scan's IN probe then skips whole row groups whose bloom rejects all
-    # probed fingerprints (min/max stats are useless on uniform hashes —
-    # measured 100k rows read -> 0 for absent probes).  Adaptive sizing
-    # keeps the bloom proportional to the actual row-group NDV instead of
-    # the 1 MB default.
-    _BLOOM_FILE_OPTS = {
-        "parquet.bloom.filter.enabled#fingerprint": "true",
-        "parquet.bloom.filter.adaptive.enabled": "true",
-    }
+    # sorted per-bucket fingerprint files with a parquet bloom on the key
+    # (see _bloom_opts): the verify scan's IN probe skips row groups
+    _BLOOM_FILE_OPTS = _bloom_opts("fingerprint")
 
     def _resolve(self, marked):
         """Split a bloom-marked frame (``__hit`` column) into
-        definitively-new rows plus verified bloom positives.  The distinct
-        (bucket, fingerprint) pairs of the positives — a driver collect
-        bounded by the CAP, never by data — drive two levels of state-scan
-        pruning: the bucket ids prune partitions (directory level), and,
-        when the positives are few (the normal case: true dups + ~FPR of
-        the batch), the fingerprints themselves are pushed as a parquet
-        ``In`` filter, so row-group min/max + dictionary stats skip nearly
-        every row of the surviving partitions too (files are written
-        sorted by fingerprint for exactly this)."""
+        definitively-new rows plus bloom positives verified against the
+        state slice :func:`_pruned_read` reads for them."""
         neg = marked.where(~F.col("__hit")).drop("__hit")
         pos = marked.where(F.col("__hit")).drop("__hit")
-        hit_rows = (
-            pos.select(F.expr(self._bucket_expr()).alias("b"), "fingerprint")
-            .distinct()
-            .limit(self._IN_PUSHDOWN_CAP + 1)
-            .collect()
-        )
-        if not hit_rows:
+        pruned = _pruned_read(pos, self._bucket_expr(), "fingerprint", self._state_df)
+        if pruned is None:
             return neg
-        if len(hit_rows) <= self._IN_PUSHDOWN_CAP:
-            buckets = sorted({r[0] for r in hit_rows})
-            pruned = self._state_df(buckets=buckets).where(
-                isin_chunked("fingerprint", [r[1] for r in hit_rows])
-            )
-        else:
-            buckets = [
-                r[0]
-                for r in pos.select(F.expr(self._bucket_expr()).alias("b"))
-                .distinct()
-                .collect()
-            ]
-            pruned = self._state_df(buckets=buckets)
         verified = pos.join(pruned, "fingerprint", "left_anti")
         return neg.unionByName(verified)
 
@@ -282,68 +315,34 @@ class DedupState:
 
     def _append_new(self, fresh, pinned_unique: bool = False) -> int:
         """Write fingerprints ALREADY KNOWN to be absent from the state
-        (``filter_new``/``_resolve`` output).  Distinct-per-batch via the
-        aggregate; ``repartition(n_buckets, fp_bucket)`` bounds the write
-        at ONE file per bucket per append — without it, every shuffle
-        partition writes into every bucket directory and the state
-        degrades into thousands of KB-files whose listing cost grows with
-        the number of appends (measured 6s -> 29s per batch over 10
-        appends at sf1).  Run ``compact()`` when the per-bucket file
-        count (one per append) gets large.
+        (``filter_new``/``_resolve`` output), distinct-per-batch via the
+        aggregate, as one partitioned append (see
+        :meth:`_append_partitioned`).  Run ``compact()`` when the
+        per-bucket file count (one per append) gets large.
+
+        The placed frame is pinned BEFORE the write: fresh's lineage may
+        read the state path (the _resolve anti-join), and both the write
+        and the bloom build run after the path is written — an
+        un-truncated recompute would anti-join the new fingerprints
+        against THEMSELVES, building the bloom over an empty set and
+        turning every one of these fingerprints into a future bloom
+        false-negative (= admitted duplicate).  The checkpoint is a narrow
+        (fingerprint, bucket) frame, O(batch).
 
         ``pinned_unique=True`` (the ``ingest`` fast path) promises the
         input is a CHECKPOINTED frame of already-distinct, already-unseen
         fingerprints: the dedup aggregate and the pre-write checkpoint
-        are skipped, and the row count rides the write job as an observe
-        accumulator — two Spark jobs total (write + bloom build)."""
-        from pyspark.sql import Observation
-
+        are skipped — two Spark jobs total (write + bloom build)."""
         fresh = fresh.where(F.col("fingerprint").isNotNull())
+        bucket = F.expr(self._bucket_expr()).alias("fp_bucket")
         if pinned_unique:
-            fresh = (
-                fresh.select(
-                    "fingerprint", F.expr(self._bucket_expr()).alias("fp_bucket")
-                )
-                .repartition(self.n_buckets, "fp_bucket")
-                # sorted files -> tight fingerprint min/max + dictionary
-                # stats per row group, which is what lets _resolve's In
-                # pushdown skip nearly all state rows at verify time
-                .sortWithinPartitions("fp_bucket", "fingerprint")
-            )
+            fresh = fresh.select("fingerprint", bucket)
         else:
-            # localCheckpoint BEFORE the write: fresh's lineage may read
-            # the state path (the _resolve anti-join), and both consumers
-            # below run after the path is written — an un-truncated
-            # recompute would anti-join the new fingerprints against
-            # THEMSELVES, building the bloom over an empty set and turning
-            # every one of these fingerprints into a future bloom
-            # false-negative (= admitted duplicate).  The checkpoint is a
-            # narrow (fingerprint, bucket) frame, O(batch).
-            fresh = (
-                fresh.groupBy("fingerprint")
-                .agg(F.expr(self._bucket_expr()).alias("fp_bucket"))
-                .select("fingerprint", "fp_bucket")
-                .repartition(self.n_buckets, "fp_bucket")
-                .sortWithinPartitions("fp_bucket", "fingerprint")
-                .localCheckpoint(eager=True)
-            )
-        obs = Observation()
-        (
-            fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.partitionBy("fp_bucket")
-            .options(**self._BLOOM_FILE_OPTS)
-            .mode("append")
-            .parquet(self._data_path())
+            fresh = fresh.groupBy("fingerprint").agg(bucket)
+        n_new = self._append_partitioned(
+            fresh, _DATA, "fp_bucket", ("fp_bucket", "fingerprint"),
+            self._BLOOM_FILE_OPTS, "fingerprint", pin=not pinned_unique,
         )
-        n_new = int(obs.get["n"])
-        if n_new:
-            batch_bloom = bloom_build(
-                fresh.select("fingerprint"),
-                "fingerprint",
-                num_bits=self._meta["bloom"]["m"],
-                num_hashes=self._meta["bloom"]["k"],
-            )
-            self._meta["bloom"] = bloom_merge(self._meta["bloom"], batch_bloom)
         self._meta["n_fingerprints"] += n_new
         self._meta["n_appends"] += 1
         self._write_meta()
@@ -482,24 +481,16 @@ class DedupState:
         downstream exact re-dedup is one groupBy away.  Returns the
         StreamingQuery.  ``trigger``: processing-time interval (e.g.
         "10 seconds") or "availableNow" to drain what exists and stop."""
-        from ..core import TidyFrame as _TF
 
         def _ingest_batch(batch_df, batch_id: int) -> None:
-            fresh = self.filter_new(_TF(batch_df), id_col, text_col)
+            fresh = self.filter_new(TidyFrame(batch_df), id_col, text_col)
             pinned = fresh.df.localCheckpoint(eager=True)
             pinned.write.mode("append").parquet(out_path)
             self.append(pinned)
 
-        w = (
-            stream_tf.df.writeStream.outputMode("append")
-            .foreachBatch(_ingest_batch)
-            .option("checkpointLocation", checkpoint)
+        return foreach_batch(
+            stream_tf, _ingest_batch, checkpoint, mode="append", trigger=trigger
         )
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif trigger:
-            w = w.trigger(processingTime=trigger)
-        return w.start()
 
     def compact(self, target_mb: int = 128) -> None:
         """Rewrite the accreted per-batch files into right-sized ones —
@@ -534,24 +525,185 @@ class DedupState:
         swap_dir(self.spark, data, tmp)
 
 
-class NearDupState:
+
+
+class _BandedLSHState(_BucketedStore):
+    """The banded-LSH near-dup state: one ``check``/``record`` for the
+    MinHash (:class:`NearDupState`) and random-hyperplane
+    (:class:`EmbeddingDedupState`) members.
+
+    On disk: a ``bands`` table of (id, band, hash) LSH postings
+    partitioned by ``bb``, a hash of the band key, with a parquet bloom on
+    the hash; a payload table (id, payload) partitioned by a hash of the
+    id with a parquet bloom on the id; and a mergeable bloom sidecar over
+    the band keys.  Per batch, the only state I/O is proportional to the
+    batch's BAND COLLISIONS, not the corpus: bloom-negative band keys are
+    definitively collision-free and never touch disk; positives read only
+    their partitions and row groups (:func:`_pruned_read`), and so do the
+    payloads fetched to verify each candidate.
+
+    A member supplies its band frame (``check``, and ``_kept_rows`` for
+    the keepers), its verify SQL and its on-disk names as class
+    attributes."""
+
+    _ID: str  # id column of both tables
+    _HASH: str  # band-hash column of ``bands``
+    _PAY_DIR: str  # payload table (subdirectory)
+    _PAY_COL: str  # payload column, also its name in the batch frame
+    _PAY_PART: str  # payload table's partition column
+    _COUNTER: str  # meta counter of recorded ids
+    _VERIFY: str  # pair score, SQL over the payloads {l} and {r}
+
+    def _band_key(self) -> str:
+        return f"concat_ws(':', band, {self._HASH})"
+
+    def _band_bucket(self) -> str:
+        return f"pmod(xxhash64(band, {self._HASH}), {self._meta['n_buckets']})"
+
+    def _pay_bucket(self) -> str:
+        return f"pmod(xxhash64({self._ID}), {self._meta['n_buckets']})"
+
+    def _read_pruned(self, sub: str, part_col: str, buckets):
+        return self.spark.read.parquet(join_path(self.path, sub)).where(
+            isin_chunked(part_col, [int(b) for b in buckets])
+        )
+
+    def _check(self, base, pay, nb, id_col, threshold, max_bucket):
+        """Pairs of the batch with the state and with itself, verified.
+        ``pay`` is the pinned (__id, payload) frame, ``nb`` the pinned
+        (__id, band, hash) band rows, ``base`` the frame the output
+        extends with ``dup_of`` (NULL → keep; else the smallest paired id,
+        history or batch).  ``max_bucket`` (None: uncapped) caps each band
+        key's partners — stored ones AT VERIFY TIME (a row_number window
+        over the pruned slice, bounding the candidate join; the hot key's
+        rows are still read) and within the batch by dropping the key."""
+        H, ID, P = self._HASH, self._ID, self._PAY_COL
+        score = F.expr(self._VERIFY.format(l="__pl", r="__pr")).alias("__s")
+        left = pay.select(F.col("__id").alias("__nid"), F.col(P).alias("__pl"))
+
+        def verified(cand, right):
+            return (
+                cand.join(left, "__nid")
+                .join(right, "__pid")
+                .select("__nid", "__pid", score)
+                .filter(F.col("__s") >= threshold)
+            )
+
+        vs_seen = None
+        if self._meta["n_appends"]:
+            pos = (
+                bloom_mark(TidyFrame(nb), self._band_key(), self._meta["bloom"], "__hit")
+                .df.where(F.col("__hit"))
+                .drop("__hit")
+            )
+            bands_df = _pruned_read(
+                pos, self._band_bucket(), H, partial(self._read_pruned, "bands", "bb")
+            )
+            if bands_df is not None:
+                if max_bucket is not None:
+                    bands_df = bands_df.withColumn(
+                        "__rn",
+                        F.expr(
+                            f"row_number() OVER (PARTITION BY band, {H} ORDER BY {ID})"
+                        ),
+                    ).where(F.col("__rn") <= max_bucket).drop("__rn")
+                cand = (
+                    pos.alias("l")
+                    .join(
+                        bands_df.alias("r"),
+                        (F.col("l.band") == F.col("r.band"))
+                        & (F.col(f"l.{H}") == F.col(f"r.{H}")),
+                    )
+                    .select(
+                        F.col("l.__id").alias("__nid"), F.col(f"r.{ID}").alias("__pid")
+                    )
+                    .dropDuplicates(["__nid", "__pid"])
+                    .localCheckpoint(eager=True)
+                )
+                pays = _pruned_read(
+                    cand.select(F.col("__pid").alias(ID)),
+                    self._pay_bucket(),
+                    ID,
+                    partial(self._read_pruned, self._PAY_DIR, self._PAY_PART),
+                )
+                if pays is not None:
+                    vs_seen = verified(
+                        cand,
+                        pays.select(F.col(ID).alias("__pid"), F.col(P).alias("__pr")),
+                    )
+
+        nbc = nb
+        if max_bucket is not None:
+            hot = nb.groupBy("band", H).count().filter(F.col("count") > max_bucket)
+            nbc = nb.join(F.broadcast(hot.select("band", H)), ["band", H], "left_anti")
+        within = verified(
+            nbc.alias("l")
+            .join(
+                nbc.alias("r"),
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col(f"l.{H}") == F.col(f"r.{H}"))
+                & (F.col("r.__id") < F.col("l.__id")),
+            )
+            .select(F.col("l.__id").alias("__nid"), F.col("r.__id").alias("__pid"))
+            .dropDuplicates(["__nid", "__pid"]),
+            pay.select(F.col("__id").alias("__pid"), F.col(P).alias("__pr")),
+        )
+        pairs = within if vs_seen is None else vs_seen.unionAll(within)
+        best = pairs.groupBy("__nid").agg(F.min("__pid").alias("dup_of"))
+        out = (
+            base.join(best, F.col(id_col) == F.col("__nid"), "left")
+            .drop("__nid")
+            .localCheckpoint(eager=True)
+        )
+        return TidyFrame(out), {"out": out, "id_col": id_col, "pay": pay, "nb": nb}
+
+    def record(self, token, keep_ids=None) -> int:
+        """Append a :meth:`check`'s keepers — band postings + payloads +
+        sidecar bloom, all from the check's pins (nothing re-reads the
+        state paths after the writes).  ``keep_ids`` (optional
+        single-column frame) restricts the recorded keepers to a
+        downstream gate's survivors: ids it excludes are treated as
+        dropped and never enter the state.  Returns the number of ids
+        recorded."""
+        H, ID, P = self._HASH, self._ID, self._PAY_COL
+        id_col = token["id_col"]
+        keep = token["out"].where(F.col("dup_of").isNull())
+        if keep_ids is not None:
+            kdf = keep_ids.df if hasattr(keep_ids, "df") else keep_ids
+            # no broadcast hint: keeper sets are batch-sized (can be
+            # large); AQE picks broadcast when the stats allow it
+            keep = keep.join(
+                kdf.select(F.col(kdf.columns[0]).alias(id_col)).distinct(),
+                id_col,
+                "left_semi",
+            )
+        kp, kb = self._kept_rows(keep, token)
+        self._append_partitioned(
+            kb.select(
+                F.col("__id").alias(ID), "band", H,
+                F.expr(self._band_bucket()).alias("bb"),
+            ),
+            "bands", "bb", ("bb", H), _bloom_opts(H), self._band_key(), pin=True,
+        )
+        n_kept = self._append_partitioned(
+            kp.select(F.col("__id").alias(ID), P)
+            .withColumn(self._PAY_PART, F.expr(self._pay_bucket())),
+            self._PAY_DIR, self._PAY_PART, (self._PAY_PART, ID), _bloom_opts(ID),
+        )
+        self._meta[self._COUNTER] += n_kept
+        self._meta["n_appends"] += 1
+        self._write_meta()
+        return n_kept
+
+
+class NearDupState(_BandedLSHState):
     """Persistent MinHash-LSH state — the near-dup twin of
-    :class:`DedupState`, same pruned-read design.
-
-    On disk: a ``bands`` table of (band, bh, doc_id) LSH bucket rows,
-    directory-partitioned by a stable hash of the band key and written
-    with a parquet bloom filter on ``bh``; a ``sigs`` table of
-    (doc_id, minhash) signatures partitioned by a hash of ``doc_id`` with
-    a bloom on ``doc_id``; and a mergeable bloom sidecar over the band
-    keys.  History TEXT is never stored (~0.5 KB/doc at num_perm=64).
-
-    Per batch, the only state I/O is proportional to the batch's BAND
-    COLLISIONS, not the corpus: bloom-negative band keys (the vast
-    majority of a mostly-novel batch) are definitively collision-free and
-    never touch disk; positives read only their partitions, and the
-    parquet blooms skip row groups whose keys aren't probed.  Candidate
-    verification is est-Jaccard (signature-component agreement) against
-    signatures fetched with the same two-level pruning.
+    :class:`DedupState`, same pruned-read design (see
+    :class:`_BandedLSHState`): ``bands`` holds (doc_id, band, bh)
+    partitioned by ``bb``, ``sigs`` holds (doc_id, minhash) partitioned by
+    ``sb``.  History TEXT is never stored (~0.5 KB/doc at num_perm=64).
+    Candidate verification is est-Jaccard (signature-component
+    agreement).
 
     Semantics match :func:`tidierdb_jl_spark.llm.dedup.
     minhash_dedup_incremental` exactly (differentially tested): ``ingest``
@@ -561,28 +713,20 @@ class NearDupState:
     running result equals a full-corpus :func:`minhash_dedup`.
 
     Skew note: a boilerplate band key accumulates doc_ids across appends;
-    ``max_bucket`` caps each key's stored partners AT VERIFY TIME (a
-    row_number window over the pruned slice), bounding the candidate
-    join; the hot key's rows are still read, so genuinely pathological
-    keys should be cleaned upstream (the batch-level census cap of
-    ``minhash_dedup_pairs``).
+    ``max_bucket`` caps each key's stored partners AT VERIFY TIME,
+    bounding the candidate join; the hot key's rows are still read, so
+    genuinely pathological keys should be cleaned upstream (the
+    batch-level census cap of ``minhash_dedup_pairs``).
     """
 
     _META = "_neardup_state.json"
-    _IN_PUSHDOWN_CAP = 4096
-    _BANDS_BLOOM_OPTS = {
-        "parquet.bloom.filter.enabled#bh": "true",
-        "parquet.bloom.filter.adaptive.enabled": "true",
-    }
-    _SIGS_BLOOM_OPTS = {
-        "parquet.bloom.filter.enabled#doc_id": "true",
-        "parquet.bloom.filter.adaptive.enabled": "true",
-    }
-
-    def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
+    _ID, _HASH = "doc_id", "bh"
+    _PAY_DIR, _PAY_COL, _PAY_PART = "sigs", "minhash", "sb"
+    _COUNTER = "n_docs"
+    _VERIFY = (
+        "CAST(size(filter(zip_with({l}, {r}, (x, y) -> x = y), v -> v))"
+        " AS DOUBLE) / size({l})"
+    )
 
     @classmethod
     def create(
@@ -598,13 +742,10 @@ class NearDupState:
     ) -> "NearDupState":
         """``expected_items`` sizes the band-key bloom for the LIFETIME
         number of stored docs (keys ≈ docs × bands; sized internally)."""
-        path = str(path)
-        if fs_exists(spark, join_path(path, cls._META)):
-            raise ValueError(f"NearDupState already exists at {path}")
         if num_perm % bands:
             raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
         m, k = bloom_size(expected_items * bands, fpp)
-        meta = {
+        return cls._create(spark, path, {
             "num_perm": int(num_perm),
             "bands": int(bands),
             "shingle": int(shingle),
@@ -613,23 +754,7 @@ class NearDupState:
             "expected_items": int(expected_items),
             "n_docs": 0,
             "n_appends": 0,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
-        st._write_meta()
-        return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "NearDupState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), cls._META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, self._META), json.dumps(self._meta)
-        )
+        })
 
     def stats(self) -> dict:
         return {
@@ -640,17 +765,6 @@ class NearDupState:
             "bands": self._meta["bands"],
             "bloom_bits": self._meta["bloom"]["m"],
         }
-
-    # band-key expressions (band is 0..bands-1, bh a 32-bit hash)
-    _KEY = "concat_ws(':', band, bh)"
-    _BB = "pmod(xxhash64(band, bh), {n})"
-    _SB = "pmod(xxhash64(doc_id), {n})"
-
-    def _read_pruned(self, sub: str, part_col: str, buckets):
-        df = self.spark.read.parquet(join_path(self.path, sub))
-        if buckets is not None:
-            df = df.where(isin_chunked(part_col, [int(b) for b in buckets]))
-        return df
 
     def ingest(
         self,
@@ -687,265 +801,51 @@ class NearDupState:
         dropping the token discards the check, so callers can run further
         gates (embedding dedup, quality filters) and record only the
         final survivors."""
-        from .dedup import _band_explode, minhash_signature
+        from .dedup import minhash_signature
 
         meta = self._meta
-        n_bk = meta["n_buckets"]
-        rows = meta["num_perm"] // meta["bands"]
         sig = minhash_signature(
             tf, id_col, text_col, meta["num_perm"], meta["shingle"]
         ).df.localCheckpoint(eager=True)
-        sd = sig.select(F.col(id_col).alias("__id"), "minhash")
-        nb = _band_explode(sd, meta["bands"], rows).localCheckpoint(eager=True)
+        pay = sig.select(F.col(id_col).alias("__id"), "minhash")
+        nb = self._bands(pay).localCheckpoint(eager=True)
+        return self._check(sig, pay, nb, id_col, threshold, max_bucket)
 
-        est = (
-            "CAST(size(filter(zip_with(__ml, __mr, (x, y) -> x = y), v -> v))"
-            " AS DOUBLE) / size(__ml)"
-        )
-
-        vs_seen = None
-        if meta["n_appends"]:
-            marked = bloom_mark(
-                TidyFrame(nb), self._KEY, meta["bloom"], "__hit"
-            ).df
-            pos = marked.where(F.col("__hit")).drop("__hit")
-            hit = (
-                pos.select(
-                    F.expr(self._BB.format(n=n_bk)).alias("b"), "band", "bh"
-                )
-                .distinct()
-                .limit(self._IN_PUSHDOWN_CAP + 1)
-                .collect()
-            )
-            if hit:
-                if len(hit) <= self._IN_PUSHDOWN_CAP:
-                    bands_df = self._read_pruned(
-                        "bands", "bb", sorted({r[0] for r in hit})
-                    ).where(isin_chunked("bh", [r[2] for r in hit]))
-                else:
-                    bks = [
-                        r[0]
-                        for r in pos.select(
-                            F.expr(self._BB.format(n=n_bk)).alias("b")
-                        ).distinct().collect()
-                    ]
-                    bands_df = self._read_pruned("bands", "bb", bks)
-                # verify-time skew cap: at most max_bucket stored partners
-                # per band key enter the candidate join
-                bands_df = bands_df.withColumn(
-                    "__rn",
-                    F.expr(
-                        "row_number() OVER (PARTITION BY band, bh ORDER BY doc_id)"
-                    ),
-                ).where(F.col("__rn") <= max_bucket).drop("__rn")
-                cand = (
-                    pos.alias("l")
-                    .join(
-                        bands_df.alias("r"),
-                        (F.col("l.band") == F.col("r.band"))
-                        & (F.col("l.bh") == F.col("r.bh")),
-                    )
-                    .select(
-                        F.col("l.__id").alias("__nid"),
-                        F.col("r.doc_id").alias("__pid"),
-                    )
-                    .dropDuplicates(["__nid", "__pid"])
-                    .localCheckpoint(eager=True)
-                )
-                pid_rows = (
-                    cand.select(
-                        F.expr(
-                            self._SB.format(n=n_bk).replace("doc_id", "__pid")
-                        ).alias("b"),
-                        "__pid",
-                    )
-                    .distinct()
-                    .limit(self._IN_PUSHDOWN_CAP + 1)
-                    .collect()
-                )
-                if pid_rows:
-                    if len(pid_rows) <= self._IN_PUSHDOWN_CAP:
-                        sigs_df = self._read_pruned(
-                            "sigs", "sb", sorted({r[0] for r in pid_rows})
-                        ).where(isin_chunked("doc_id", [r[1] for r in pid_rows]))
-                    else:
-                        sbks = [
-                            r[0]
-                            for r in cand.select(
-                                F.expr(
-                                    self._SB.format(n=n_bk).replace(
-                                        "doc_id", "__pid"
-                                    )
-                                ).alias("b")
-                            ).distinct().collect()
-                        ]
-                        sigs_df = self._read_pruned("sigs", "sb", sbks)
-                    ml = sd.select(
-                        F.col("__id").alias("__nid"),
-                        F.col("minhash").alias("__ml"),
-                    )
-                    mr = sigs_df.select(
-                        F.col("doc_id").alias("__pid"),
-                        F.col("minhash").alias("__mr"),
-                    )
-                    vs_seen = (
-                        cand.join(ml, "__nid")
-                        .join(mr, "__pid")
-                        .select("__nid", "__pid", F.expr(est).alias("__est"))
-                        .filter(F.col("__est") >= threshold)
-                    )
-
-        # within-batch pairs (same cap + est verify as the state side)
-        hot = (
-            nb.groupBy("band", "bh").count().filter(F.col("count") > max_bucket)
-        )
-        nbc = nb.join(
-            F.broadcast(hot.select("band", "bh")), ["band", "bh"], "left_anti"
-        )
-        ml = sd.select(F.col("__id").alias("__nid"), F.col("minhash").alias("__ml"))
-        mr = sd.select(F.col("__id").alias("__pid"), F.col("minhash").alias("__mr"))
-        within = (
-            nbc.alias("l")
-            .join(
-                nbc.alias("r"),
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bh") == F.col("r.bh"))
-                & (F.col("r.__id") < F.col("l.__id")),
-            )
-            .select(F.col("l.__id").alias("__nid"), F.col("r.__id").alias("__pid"))
-            .dropDuplicates(["__nid", "__pid"])
-            .join(ml, "__nid")
-            .join(mr, "__pid")
-            .select("__nid", "__pid", F.expr(est).alias("__est"))
-            .filter(F.col("__est") >= threshold)
-        )
-        pairs = within if vs_seen is None else vs_seen.unionAll(within)
-        best = pairs.groupBy("__nid").agg(F.min("__pid").alias("dup_of"))
-        out = (
-            sig.join(best, F.col(id_col) == F.col("__nid"), "left")
-            .drop("__nid")
-            .localCheckpoint(eager=True)
-        )
-        return TidyFrame(out), {"out": out, "id_col": id_col}
-
-    def record(self, token, keep_ids=None) -> int:
-        """Append a :meth:`check`'s keepers — bands + signatures + sidecar
-        bloom (all from pins; nothing re-reads the state paths after the
-        writes).  ``keep_ids`` (optional single-column frame) restricts
-        the recorded keepers to a downstream gate's survivors: documents
-        it excludes are treated as dropped and never enter the state.
-        Returns the number of documents recorded."""
+    def _bands(self, pay):
         from .dedup import _band_explode
 
         meta = self._meta
-        n_bk = meta["n_buckets"]
-        rows = meta["num_perm"] // meta["bands"]
-        out, id_col = token["out"], token["id_col"]
-        keep = out.where(F.col("dup_of").isNull()).select(
-            F.col(id_col).alias("doc_id"), "minhash"
-        )
-        if keep_ids is not None:
-            kdf = keep_ids.df if hasattr(keep_ids, "df") else keep_ids
-            kcol = kdf.columns[0]
-            # no broadcast hint: keeper sets are batch-sized (can be
-            # large); AQE picks broadcast when the stats allow it
-            keep = keep.join(
-                kdf.select(F.col(kcol).alias("doc_id")).distinct(),
-                "doc_id",
-                "left_semi",
-            )
-        kb = (
-            _band_explode(
-                keep.select(F.col("doc_id").alias("__id"), "minhash"),
-                meta["bands"],
-                rows,
-            )
-            .select(
-                F.col("__id").alias("doc_id"),
-                "band",
-                "bh",
-                F.expr(self._BB.format(n=n_bk)).alias("bb"),
-            )
-            .repartition(n_bk, "bb")
-            .sortWithinPartitions("bb", "bh")
-            .localCheckpoint(eager=True)
-        )
-        (
-            kb.write.partitionBy("bb")
-            .options(**self._BANDS_BLOOM_OPTS)
-            .mode("append")
-            .parquet(join_path(self.path, "bands"))
-        )
-        ks = (
-            keep.withColumn("sb", F.expr(self._SB.format(n=n_bk)))
-            .repartition(n_bk, "sb")
-            .sortWithinPartitions("sb", "doc_id")
-        )
-        from pyspark.sql import Observation
+        return _band_explode(pay, meta["bands"], meta["num_perm"] // meta["bands"])
 
-        obs = Observation()
-        (
-            ks.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.partitionBy("sb")
-            .options(**self._SIGS_BLOOM_OPTS)
-            .mode("append")
-            .parquet(join_path(self.path, "sigs"))
-        )
-        n_kept = int(obs.get["n"])
-        if n_kept:
-            batch_bloom = bloom_build(
-                kb.selectExpr(f"{self._KEY} AS k"),
-                "k",
-                num_bits=meta["bloom"]["m"],
-                num_hashes=meta["bloom"]["k"],
-            )
-            self._meta["bloom"] = bloom_merge(meta["bloom"], batch_bloom)
-        self._meta["n_docs"] += n_kept
-        self._meta["n_appends"] += 1
-        self._write_meta()
-        return n_kept
+    def _kept_rows(self, keep, token):
+        # the output carries the signatures: re-banding the keepers is
+        # cheaper than joining them back to the check's pins
+        kp = keep.select(F.col(token["id_col"]).alias("__id"), "minhash")
+        return kp, self._bands(kp)
 
 
-class EmbeddingDedupState:
+class EmbeddingDedupState(_BandedLSHState):
     """Persistent random-hyperplane-LSH state for EMBEDDING near-dups —
     the third member of the state family (exact :class:`DedupState`,
-    text :class:`NearDupState`, vectors here).
-
-    On disk: a ``bands`` table of (band, sig, vec_id) LSH postings
-    partitioned by a hash of the band key with a parquet bloom on
-    ``sig``; a ``vecs`` table of UNIT vectors (vec_id, unit) partitioned
-    by a hash of ``vec_id`` with a bloom on ``vec_id``; and a mergeable
-    band-key bloom sidecar.  The hyperplanes are deterministic seeded
+    text :class:`NearDupState`, vectors here), same pruned-read design
+    (see :class:`_BandedLSHState`): ``bands`` holds (vec_id, band, sig)
+    partitioned by ``bb``, ``vecs`` holds UNIT vectors (vec_id, unit)
+    partitioned by ``vb``.  The hyperplanes are deterministic seeded
     literals (:func:`~tidierdb_jl_spark.llm.simsearch._hyperplanes`), so
     signatures computed in different sessions collide correctly; the
     vector dimension is captured at the first ingest and enforced after.
 
-    Per batch, state I/O is bounded by the batch's band collisions
-    (bloom-negative keys never touch disk; positives read pruned
-    partitions/row-groups), and every candidate is EXACT-cosine verified
-    against fetched unit vectors — no false positives.  Semantics match
+    Every candidate is EXACT-cosine verified against fetched unit vectors
+    — no false positives.  Semantics match
     :func:`~tidierdb_jl_spark.llm.dedup.embedding_dedup_incremental`
     (differentially tested): ``ingest`` returns the batch + ``dup_of``,
     and only keepers enter the state."""
 
     _META = "_embdedup_state.json"
-    _IN_PUSHDOWN_CAP = 4096
-    _BANDS_BLOOM_OPTS = {
-        "parquet.bloom.filter.enabled#sig": "true",
-        "parquet.bloom.filter.adaptive.enabled": "true",
-    }
-    _VECS_BLOOM_OPTS = {
-        "parquet.bloom.filter.enabled#vec_id": "true",
-        "parquet.bloom.filter.adaptive.enabled": "true",
-    }
-    _KEY = "concat_ws(':', __band, __sig)"
-    _BB = "pmod(xxhash64(__band, __sig), {n})"
-    _VB = "pmod(xxhash64(vec_id), {n})"
-
-    def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
+    _ID, _HASH = "vec_id", "sig"
+    _PAY_DIR, _PAY_COL, _PAY_PART = "vecs", "unit", "vb"
+    _COUNTER = "n_vecs"
+    _VERIFY = _dot("{l}", "{r}")
 
     @classmethod
     def create(
@@ -958,11 +858,8 @@ class EmbeddingDedupState:
         expected_items: int = 1_000_000,
         fpp: float = 0.01,
     ) -> "EmbeddingDedupState":
-        path = str(path)
-        if fs_exists(spark, join_path(path, cls._META)):
-            raise ValueError(f"EmbeddingDedupState already exists at {path}")
         m, k = bloom_size(expected_items * bands, fpp)
-        meta = {
+        return cls._create(spark, path, {
             "nbits": int(nbits),
             "bands": int(bands),
             "dim": None,  # captured at first ingest
@@ -971,23 +868,7 @@ class EmbeddingDedupState:
             "expected_items": int(expected_items),
             "n_vecs": 0,
             "n_appends": 0,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
-        st._write_meta()
-        return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "EmbeddingDedupState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), cls._META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, self._META), json.dumps(self._meta)
-        )
+        })
 
     def stats(self) -> dict:
         return {
@@ -999,12 +880,6 @@ class EmbeddingDedupState:
             "bands": self._meta["bands"],
             "bloom_bits": self._meta["bloom"]["m"],
         }
-
-    def _read_pruned(self, sub: str, part_col: str, buckets):
-        df = self.spark.read.parquet(join_path(self.path, sub))
-        if buckets is not None:
-            df = df.where(isin_chunked(part_col, [int(b) for b in buckets]))
-        return df
 
     def ingest(
         self,
@@ -1031,10 +906,7 @@ class EmbeddingDedupState:
     ):
         """Gate WITHOUT recording: ``(out, token)``, state untouched —
         same contract as :meth:`NearDupState.check`."""
-        from .simsearch import _dot, _hyperplanes, _make_sig_udf, _to_double
-
         meta = self._meta
-        n_bk = meta["n_buckets"]
         dim = len(tf.df.select(vec_col).first()[0])
         if meta["dim"] is None:
             meta["dim"] = dim
@@ -1048,207 +920,24 @@ class EmbeddingDedupState:
             meta["nbits"],
             meta["bands"],
         )
-        unit = (
-            "transform(__v, x -> x / sqrt(aggregate(__v, 0.0D, (a, y) -> a + y * y)))"
-        )
-        nvec = (
+        pay = (
             tf.df.select(
                 F.col(id_col).alias("__id"), F.expr(_to_double(vec_col)).alias("__v")
             )
-            .select("__id", F.expr(unit).alias("__u"))
+            .select("__id", F.expr(_UNIT).alias("unit"))
             .localCheckpoint(eager=True)
         )
         nb = (
-            nvec.select("__id", sig_udf(F.col("__u")).alias("__sigs"))
-            .select("__id", F.posexplode_outer("__sigs").alias("__band", "__sig"))
+            pay.select("__id", sig_udf(F.col("unit")).alias("__sigs"))
+            .select("__id", F.posexplode_outer("__sigs").alias("band", "sig"))
             .localCheckpoint(eager=True)
         )
+        return self._check(tf.df, pay, nb, id_col, threshold, None)
 
-        vs_seen = None
-        if meta["n_appends"]:
-            marked = bloom_mark(
-                TidyFrame(nb), self._KEY, meta["bloom"], "__hit"
-            ).df
-            pos = marked.where(F.col("__hit")).drop("__hit")
-            hit = (
-                pos.select(
-                    F.expr(self._BB.format(n=n_bk)).alias("b"), "__band", "__sig"
-                )
-                .distinct()
-                .limit(self._IN_PUSHDOWN_CAP + 1)
-                .collect()
-            )
-            if hit:
-                if len(hit) <= self._IN_PUSHDOWN_CAP:
-                    bands_df = self._read_pruned(
-                        "bands", "bb", sorted({r[0] for r in hit})
-                    ).where(isin_chunked("sig", [r[2] for r in hit]))
-                else:
-                    bks = [
-                        r[0]
-                        for r in pos.select(
-                            F.expr(self._BB.format(n=n_bk)).alias("b")
-                        ).distinct().collect()
-                    ]
-                    bands_df = self._read_pruned("bands", "bb", bks)
-                cand = (
-                    pos.alias("l")
-                    .join(
-                        bands_df.alias("r"),
-                        (F.col("l.__band") == F.col("r.band"))
-                        & (F.col("l.__sig") == F.col("r.sig")),
-                    )
-                    .select(
-                        F.col("l.__id").alias("__nid"),
-                        F.col("r.vec_id").alias("__pid"),
-                    )
-                    .dropDuplicates(["__nid", "__pid"])
-                    .localCheckpoint(eager=True)
-                )
-                pid_rows = (
-                    cand.select(
-                        F.expr(
-                            self._VB.format(n=n_bk).replace("vec_id", "__pid")
-                        ).alias("b"),
-                        "__pid",
-                    )
-                    .distinct()
-                    .limit(self._IN_PUSHDOWN_CAP + 1)
-                    .collect()
-                )
-                if pid_rows:
-                    if len(pid_rows) <= self._IN_PUSHDOWN_CAP:
-                        vecs_df = self._read_pruned(
-                            "vecs", "vb", sorted({r[0] for r in pid_rows})
-                        ).where(isin_chunked("vec_id", [r[1] for r in pid_rows]))
-                    else:
-                        vbks = [
-                            r[0]
-                            for r in cand.select(
-                                F.expr(
-                                    self._VB.format(n=n_bk).replace(
-                                        "vec_id", "__pid"
-                                    )
-                                ).alias("b")
-                            ).distinct().collect()
-                        ]
-                        vecs_df = self._read_pruned("vecs", "vb", vbks)
-                    la = nvec.select(
-                        F.col("__id").alias("__nid"), F.col("__u").alias("__ua")
-                    )
-                    rb = vecs_df.select(
-                        F.col("vec_id").alias("__pid"), F.col("unit").alias("__ub")
-                    )
-                    vs_seen = (
-                        cand.join(la, "__nid")
-                        .join(rb, "__pid")
-                        .select(
-                            "__nid", "__pid", F.expr(_dot("__ua", "__ub")).alias("__cos")
-                        )
-                        .filter(F.col("__cos") >= threshold)
-                    )
-
-        la = nvec.select(F.col("__id").alias("__nid"), F.col("__u").alias("__ua"))
-        rb = nvec.select(F.col("__id").alias("__pid"), F.col("__u").alias("__ub"))
-        within = (
-            nb.alias("l")
-            .join(
-                nb.alias("r"),
-                (F.col("l.__band") == F.col("r.__band"))
-                & (F.col("l.__sig") == F.col("r.__sig"))
-                & (F.col("r.__id") < F.col("l.__id")),
-            )
-            .select(F.col("l.__id").alias("__nid"), F.col("r.__id").alias("__pid"))
-            .dropDuplicates(["__nid", "__pid"])
-            .join(la, "__nid")
-            .join(rb, "__pid")
-            .select("__nid", "__pid", F.expr(_dot("__ua", "__ub")).alias("__cos"))
-            .filter(F.col("__cos") >= threshold)
+    def _kept_rows(self, keep, token):
+        ids = keep.select(F.col(token["id_col"]).alias("__k"))
+        pay, nb = token["pay"], token["nb"]
+        return (
+            pay.join(ids, pay["__id"] == ids["__k"], "left_semi"),
+            nb.join(ids, nb["__id"] == ids["__k"], "left_semi"),
         )
-        pairs = within if vs_seen is None else vs_seen.unionAll(within)
-        best = pairs.groupBy("__nid").agg(F.min("__pid").alias("dup_of"))
-        out = (
-            tf.df.join(best, F.col(id_col) == F.col("__nid"), "left")
-            .drop("__nid")
-            .localCheckpoint(eager=True)
-        )
-        return TidyFrame(out), {
-            "out": out, "id_col": id_col, "nvec": nvec, "nb": nb
-        }
-
-    def record(self, token, keep_ids=None) -> int:
-        """Append a :meth:`check`'s keepers — postings + unit vectors +
-        sidecar bloom.  ``keep_ids`` (optional single-column frame)
-        restricts the recorded keepers to a downstream gate's survivors.
-        Returns the number of vectors recorded."""
-        meta = self._meta
-        n_bk = meta["n_buckets"]
-        out, id_col = token["out"], token["id_col"]
-        nvec, nb = token["nvec"], token["nb"]
-        keep = out.where(F.col("dup_of").isNull()).select(
-            F.col(id_col).alias("vec_id")
-        )
-        if keep_ids is not None:
-            kdf = keep_ids.df if hasattr(keep_ids, "df") else keep_ids
-            kcol = kdf.columns[0]
-            keep = keep.join(
-                kdf.select(F.col(kcol).alias("vec_id")).distinct(),
-                "vec_id",
-                "left_semi",
-            )
-        keep_ids = keep
-        keep_vec = (
-            nvec.join(
-                keep_ids, nvec["__id"] == keep_ids["vec_id"], "left_semi"
-            ).select(F.col("__id").alias("vec_id"), F.col("__u").alias("unit"))
-        )
-        kb = (
-            nb.join(keep_ids, nb["__id"] == keep_ids["vec_id"], "left_semi")
-            .select(
-                F.col("__id").alias("vec_id"),
-                F.col("__band").alias("band"),
-                F.col("__sig").alias("sig"),
-                F.expr(
-                    self._BB.format(n=n_bk)
-                    .replace("__band", "band")
-                    .replace("__sig", "sig")
-                ).alias("bb"),
-            )
-            .repartition(n_bk, "bb")
-            .sortWithinPartitions("bb", "sig")
-            .localCheckpoint(eager=True)
-        )
-        (
-            kb.write.partitionBy("bb")
-            .options(**self._BANDS_BLOOM_OPTS)
-            .mode("append")
-            .parquet(join_path(self.path, "bands"))
-        )
-        kv = (
-            keep_vec.withColumn("vb", F.expr(self._VB.format(n=n_bk)))
-            .repartition(n_bk, "vb")
-            .sortWithinPartitions("vb", "vec_id")
-        )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            kv.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.partitionBy("vb")
-            .options(**self._VECS_BLOOM_OPTS)
-            .mode("append")
-            .parquet(join_path(self.path, "vecs"))
-        )
-        n_kept = int(obs.get["n"])
-        if n_kept:
-            batch_bloom = bloom_build(
-                kb.selectExpr("concat_ws(':', band, sig) AS k"),
-                "k",
-                num_bits=meta["bloom"]["m"],
-                num_hashes=meta["bloom"]["k"],
-            )
-            self._meta["bloom"] = bloom_merge(meta["bloom"], batch_bloom)
-        self._meta["n_vecs"] += n_kept
-        self._meta["n_appends"] += 1
-        self._write_meta()
-        return n_kept

@@ -73,18 +73,12 @@ from pyspark.sql import functions as F
 
 from ..core import TidyFrame
 from ..operators.heavyhitters import _mg_partition
-from ..sources.fsio import (
-    fs_exists,
-    fs_mkdirs,
-    join_path,
-    read_text,
-    write_text_atomic,
-)
+from ..sources.fsio import join_path
+from ..streaming.stream import foreach_batch
+from ._state import _PersistentState
 from .textstats import tokenize_expr
 
 __all__ = ["CorpusStatsState"]
-
-_META = "_corpus_stats_state.json"
 
 # the default report() quantiles (d49 driver row legs)
 _REPORT_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
@@ -107,7 +101,7 @@ def _quantize_sql(col: str, bits: int) -> str:
 _MAX_CAPACITY = 2_000_000
 
 
-class CorpusStatsState:
+class CorpusStatsState(_PersistentState):
     """Persistent corpus statistics: exact additive counters + a bounded
     mergeable token sketch.
 
@@ -120,10 +114,7 @@ class CorpusStatsState:
         st.heavy_hitters()            # token count intervals from the MG
     """
 
-    def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
+    _META = "_corpus_stats_state.json"
 
     # -- lifecycle -----------------------------------------------------
 
@@ -138,9 +129,6 @@ class CorpusStatsState:
         max_keys: int = 10_000,
         quantile_bits: int = 7,
     ) -> "CorpusStatsState":
-        path = str(path)
-        if fs_exists(spark, join_path(path, _META)):
-            raise ValueError(f"CorpusStatsState already exists at {path}")
         if not (0.0 < threshold_frac <= 1.0):
             raise ValueError(
                 f"threshold_frac must be in (0, 1], got {threshold_frac}"
@@ -156,7 +144,7 @@ class CorpusStatsState:
             raise ValueError("hist_width >= 1 and hist_buckets >= 2 required")
         if not (1 <= quantile_bits <= 16):
             raise ValueError("quantile_bits must be in [1, 16]")
-        meta = {
+        return cls._create(spark, path, {
             "threshold_frac": float(threshold_frac),
             "capacity": int(capacity),
             "hist_width": int(hist_width),
@@ -173,23 +161,7 @@ class CorpusStatsState:
             "q_counts": {},  # quantized token-count -> doc count
             "sketch_epoch": 0,  # 0 = no sketch written yet
             "last_stream_batch": -1,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
-        st._write_meta()
-        return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "CorpusStatsState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), _META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, _META), json.dumps(self._meta)
-        )
+        })
 
     def _sketch_path(self, epoch: int | None = None) -> str:
         e = self._meta["sketch_epoch"] if epoch is None else epoch
@@ -335,9 +307,7 @@ class CorpusStatsState:
         return self.stats()
 
     def _commit(self, new_meta: dict) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, _META), json.dumps(new_meta)
-        )
+        self._write_meta(new_meta)
         self._meta = new_meta
 
     def _read_sketch(self) -> dict:
@@ -545,16 +515,9 @@ class CorpusStatsState:
                 nm["last_stream_batch"] = int(batch_id)
                 self._commit(nm)
 
-        w = (
-            stream_tf.df.writeStream.outputMode("append")
-            .foreachBatch(_ingest_batch)
-            .option("checkpointLocation", checkpoint)
+        return foreach_batch(
+            stream_tf, _ingest_batch, checkpoint, mode="append", trigger=trigger
         )
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif trigger:
-            w = w.trigger(processingTime=trigger)
-        return w.start()
 
 
 def _mg_reduce(counters: dict, capacity: int) -> dict:

@@ -51,19 +51,12 @@ verbs (src/TidierDB.jl ``@create_table``) applied to ANN state.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
 from ..core import TidyFrame
-from ..sources.fsio import (
-    fs_delete,
-    fs_exists,
-    fs_mkdirs,
-    join_path,
-    read_text,
-    write_text_atomic,
-)
+from ..sources.fsio import fs_delete, join_path
+from ..streaming.stream import foreach_batch
+from ._state import _PersistentState
 from .simsearch import _assign_udf_name, _to_double, _train_centroids_sample
 
 _UNIT = "transform(__v, x -> x / sqrt(aggregate(__v, 0.0D, (a, y) -> a + y * y)))"
@@ -126,15 +119,10 @@ def _assign_sim_udf_name(spark, centroids) -> str:
     )
 
 
-class VectorIndexState:
+class VectorIndexState(_PersistentState):
     """Persistent IVF index: ``create`` → ``add`` batches → ``query``."""
 
     _META = "_vecindex.json"
-
-    def __init__(self, spark, path: str, meta: dict):
-        self.spark = spark
-        self.path = str(path)
-        self._meta = meta
 
     @classmethod
     def create(
@@ -145,10 +133,7 @@ class VectorIndexState:
         refine_iters: int = 5,
         sample_cap: int = 4096,
     ) -> "VectorIndexState":
-        path = str(path)
-        if fs_exists(spark, join_path(path, cls._META)):
-            raise ValueError(f"VectorIndexState already exists at {path}")
-        meta = {
+        return cls._create(spark, path, {
             "nlist": int(nlist),
             "refine_iters": int(refine_iters),
             "sample_cap": int(sample_cap),
@@ -156,23 +141,7 @@ class VectorIndexState:
             "centroids": None,  # trained at first add
             "n_vecs": 0,
             "n_appends": 0,
-        }
-        fs_mkdirs(spark, path)
-        st = cls(spark, path, meta)
-        st._write_meta()
-        return st
-
-    @classmethod
-    def open(cls, spark, path: str) -> "VectorIndexState":
-        meta = json.loads(
-            read_text(spark, join_path(str(path), cls._META), tmp_fallback=True)
-        )
-        return cls(spark, str(path), meta)
-
-    def _write_meta(self) -> None:
-        write_text_atomic(
-            self.spark, join_path(self.path, self._META), json.dumps(self._meta)
-        )
+        })
 
     def stats(self) -> dict:
         c = self._meta["centroids"]
@@ -396,16 +365,9 @@ class VectorIndexState:
                 return
             self.add(TidyFrame(batch_df), id_col=id_col, vec_col=vec_col)
 
-        w = (
-            stream_tf.df.writeStream.outputMode("append")
-            .foreachBatch(_add_batch)
-            .option("checkpointLocation", checkpoint)
+        return foreach_batch(
+            stream_tf, _add_batch, checkpoint, mode="append", trigger=trigger
         )
-        if trigger == "availableNow":
-            w = w.trigger(availableNow=True)
-        elif trigger:
-            w = w.trigger(processingTime=trigger)
-        return w.start()
 
     def knn_join(
         self,

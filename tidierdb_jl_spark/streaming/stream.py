@@ -191,6 +191,13 @@ def write_stream(
     )
     for k, v in options.items():
         w = w.option(k, v)
+    return _start(w, trigger)
+
+
+def _start(w, trigger: str | None):
+    """Start a DataStreamWriter under ``trigger``: None → Spark's default
+    (next batch as soon as the last one ends), "availableNow" → drain what
+    exists and stop, anything else → a processing-time interval."""
     if trigger == "availableNow":
         w = w.trigger(availableNow=True)
     elif trigger is not None:
@@ -199,16 +206,21 @@ def write_stream(
 
 
 def foreach_batch(
-    result: TidyFrame, fn, checkpoint: str | None = None, mode: str = "update"
+    result: TidyFrame,
+    fn,
+    checkpoint: str | None = None,
+    mode: str = "update",
+    trigger: str | None = None,
 ):
     """Arbitrary per-micro-batch sink: ``fn(batch_df, batch_id)`` runs on
     the driver with a *batch* DataFrame — the escape hatch for sinks with
     no streaming connector (JDBC upserts, dedup merges, multi-table
-    writes).  Returns the StreamingQuery."""
+    writes).  ``trigger`` as in :func:`write_stream`.  Returns the
+    StreamingQuery."""
     w = result.df.writeStream.outputMode(mode).foreachBatch(fn)
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
-    return w.start()
+    return _start(w, trigger)
 
 
 def write_stream_delta(
@@ -272,14 +284,8 @@ def write_stream_delta(
             if v - last >= checkpoint_every:
                 checkpoint_delta(sp, path)
 
-    w = (result.df.writeStream.outputMode("append")
-         .foreachBatch(commit_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger == "availableNow":
-        w = w.trigger(availableNow=True)
-    elif trigger is not None:
-        w = w.trigger(processingTime=trigger)
-    return w.start()
+    return foreach_batch(result, commit_batch, checkpoint, mode="append",
+                         trigger=trigger)
 
 
 def write_stream_iceberg(
@@ -338,14 +344,8 @@ def write_stream_iceberg(
                 expire_snapshots_iceberg(
                     sp, path, retain_last=max(2, expire_keep_last))
 
-    w = (result.df.writeStream.outputMode("append")
-         .foreachBatch(commit_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger == "availableNow":
-        w = w.trigger(availableNow=True)
-    elif trigger is not None:
-        w = w.trigger(processingTime=trigger)
-    return w.start()
+    return foreach_batch(result, commit_batch, checkpoint, mode="append",
+                         trigger=trigger)
 
 
 def stream_join(

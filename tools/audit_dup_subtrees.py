@@ -146,7 +146,7 @@ def main() -> None:
 
     from tidierdb_jl_spark import get_spark
 
-    spark = get_spark(app="dup-subtree-audit", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark(app="dup-subtree-audit")
     qs = entry_mod.queries()
     names = [n for n in qs if not only or n in only]
     n_flagged = 0

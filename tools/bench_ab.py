@@ -70,12 +70,19 @@ def main() -> None:
     ap.add_argument("--queries", default=None,
                     help="comma-separated query subset (bench.py r11+)")
     ap.add_argument("--reps", type=int, default=4)
-    ap.add_argument("--runs", type=int, default=1,
+    ap.add_argument("--runs", type=int, default=None,
                     help="SPARK_GRAFT_BENCH_RUNS per invocation: 1 = "
                          "first-run cost (startup-dominated), 5 = bench.py's "
                          "steady-state median — use 5 when the question is "
-                         "per-query execution time rather than plan overhead")
+                         "per-query execution time rather than plan overhead "
+                         "(default: 1 at sf0.1, 3 at any other "
+                         "SPARK_GRAFT_SF_DIR)")
     args = ap.parse_args()
+    if args.runs is None:
+        # beyond sf0.1 a single first run mixes cold-cache I/O into the
+        # number; three runs give bench.py a median to report
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "sf0.1")  # bench.py's default
+        args.runs = 1 if sf_dir.rstrip("/").rsplit("sf", 1)[-1] == "0.1" else 3
 
     with tempfile.TemporaryDirectory(prefix="bench_ab_") as tmp:
         ref_tree = os.path.join(tmp, "ref")

@@ -51,9 +51,7 @@ def median(xs):
 def main() -> None:
     from tidierdb_jl_spark import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app="tidierdb-amortization", cpus=cpus,
-                      shuffle_partitions=int(cpus))
+    spark = get_spark(app="tidierdb-amortization")
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
 
     cells: dict[tuple[str, str], tuple[float, float]] = {}

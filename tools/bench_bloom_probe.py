@@ -30,9 +30,8 @@ def main():
     from tidierdb_jl_spark.core import TidyFrame
     from tidierdb_jl_spark.operators.bloom import bloom_build, bloom_mark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app="bench-bloom-probe", cpus=cpus,
-                      shuffle_partitions=int(cpus))
+    spark = get_spark(app="bench-bloom-probe")
+    cpus = spark.sparkContext.defaultParallelism
     n = args.rows
     corpus = TidyFrame(
         spark.range(0, n).select(

@@ -48,8 +48,7 @@ def main() -> None:
     from tidierdb_jl_spark.llm.dedupstate import DedupState
     from tidierdb_jl_spark.core import TidyFrame
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="bench-dedupstate", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app="bench-dedupstate")
     t = register_testdata(spark, args.sf_dir)
     n_docs = t["documents"].df.count()
     step = n_docs // args.batches

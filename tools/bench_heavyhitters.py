@@ -79,9 +79,7 @@ def main() -> None:
     from tidierdb_jl_spark.llm.vocab import _token_array
     from tidierdb_jl_spark.operators.heavyhitters import heavy_hitters
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="bench-heavyhitters", cpus=cpus,
-                      shuffle_partitions=cpus)
+    spark = get_spark(app="bench-heavyhitters")
     t = register_testdata(spark, args.sf_dir)
     docs = _spread(t["documents"].df.select("text"))
 

@@ -21,11 +21,10 @@ from bench import HEADLINE  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from tidierdb_jl_spark import get_spark
 
-    spark = get_spark(app="job-census", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app="job-census")
     sc = spark.sparkContext
     qs = entry_mod.queries()
     names = [n for n in HEADLINE if n in qs]

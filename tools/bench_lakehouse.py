@@ -40,9 +40,7 @@ def main() -> None:
                                    write_delta, write_iceberg)
     from tidierdb_jl_spark.sources.readers import db_table
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app="bench-lakehouse", cpus=cpus,
-                      shuffle_partitions=int(cpus))
+    spark = get_spark(app="bench-lakehouse")
     rows = []
     for sf, sf_dir in SFS:
         if not os.path.isdir(sf_dir):

@@ -132,8 +132,8 @@ def main() -> None:
         "1": SF1_DIR,
     }
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app="tidierdb-scaling", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app="tidierdb-scaling")
+    cpus = spark.sparkContext.defaultParallelism
     qs = entry_mod.queries()
     names = [n for n in QUERIES if n in qs]
     consume(qs[names[0]](spark, "/root/testdata/sf0.001"))  # warm-up

@@ -42,8 +42,7 @@ def main() -> None:
     from tidierdb_jl_spark.llm.statsstate import CorpusStatsState
     from tidierdb_jl_spark.llm.textstats import tokenize_expr
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="bench-statsstate", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app="bench-statsstate")
     t = register_testdata(spark, args.sf_dir)
     n_docs = t["documents"].df.count()
     step = n_docs // args.batches

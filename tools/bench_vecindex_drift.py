@@ -52,8 +52,7 @@ def main() -> None:
     from tidierdb_jl_spark.llm.simsearch import _make_assign_udf, _to_double
     from tidierdb_jl_spark.llm.vectorindex import VectorIndexState
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="bench-vecdrift", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app="bench-vecdrift")
     t = register_testdata(spark, args.sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
     first = emb.filter(f"vec_id < {args.first}")

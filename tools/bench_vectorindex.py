@@ -50,8 +50,7 @@ def main() -> None:
     from tidierdb_jl_spark.llm.vectorindex import VectorIndexState
     from tidierdb_jl_spark.plans.metrics import run_with_scan_metrics
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="bench-vectorindex", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(app="bench-vectorindex")
     t = register_testdata(spark, args.sf_dir)
     emb = t["embeddings"].select("vec_id", "embedding")
     n_vecs = emb.df.count()

@@ -31,12 +31,12 @@ from bench import HEADLINE  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
     from tidierdb_jl_spark import get_spark
 
-    spark = get_spark(app="bench-vs-duckdb", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app="bench-vs-duckdb")
+    cpus = spark.sparkContext.defaultParallelism
     qs, osql = entry_mod.queries(), entry_mod.oracle_sql()
     # d36's oracle is an invariant ANCHOR (a doc count), not the
     # equivalent simhash computation — timing it would be meaningless

@@ -28,7 +28,7 @@ def main() -> None:
 
     from tidierdb_jl_spark import get_spark
 
-    spark = get_spark(app="plan-capture", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app="plan-capture")
     qs = entry_mod.queries()
     names = [n for n in (sorted(only) if only else HEADLINE) if n in qs]
     for name in names:

@@ -70,8 +70,6 @@ def main() -> None:
 
     spark = get_spark(
         app="skew-probe",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={"spark.ui.enabled": "true"},
     )
     ui = spark.sparkContext.uiWebUrl

@@ -173,8 +173,7 @@ def main() -> None:
     sf_dir = os.path.abspath(args.sf_dir)
     queries = args.queries.split(",") if args.queries else ORACLE_QUERIES
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app="tidierdb-sf1", cpus=cpus, shuffle_partitions=int(cpus))
+    spark = get_spark(app="tidierdb-sf1")
     con = duckdb.connect()
     for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
         name = os.path.basename(p)[:-8]
